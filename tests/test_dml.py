@@ -226,9 +226,10 @@ def test_partitioning_is_timezone_independent(spark, tmp_path):
 
 
 def test_auto_compaction_bounds_commit_count(spark, tmp_path):
-    """50 write batches: the snapshot plan's union-branch count (live
-    commit dirs) must stay bounded by the auto-compaction threshold, and
-    no data may be lost across compaction cycles."""
+    """50 write batches: the live commit dirs — and with them the files
+    and leaf dirs a snapshot read lists — must stay bounded by the
+    auto-compaction threshold, and no data may be lost across compaction
+    cycles."""
     t = TsTable.create(spark, str(tmp_path / "auto"), auto_compact_commits=6)
     for i in range(50):
         t.insert(mk(spark, [(T0 + i, "a", float(i))]))
@@ -245,6 +246,50 @@ def test_auto_compaction_disabled(spark, tmp_path):
     for i in range(8):
         t.insert(mk(spark, [(T0 + i, "a", float(i))]))
     assert t.live_commit_count() == 8
+
+
+def test_read_is_one_schema_bound_scan(spark, tmp_path):
+    """Over several live commit dirs, every read shape plans ONE parquet
+    FileScan with no per-commit Union, and building the frame starts no
+    Spark job: the schema is bound, so nothing is inferred from files."""
+    t = TsTable.create(spark, str(tmp_path / "scan"), auto_compact_commits=0)
+    t.insert(mk(spark, [(T0, "a", 1.0), (T0 + DAY, "b", 2.0)]))
+    t.insert(mk(spark, [(T0 + 1, "b", 3.0), (T0 + 2 * DAY, "a", 4.0)]))
+    # an integer value column is written as double, like the bound schema
+    t.insert(
+        spark.createDataFrame(
+            [(T0 + 2, "a", 5)], "timestamp long, tag string, value long"
+        )
+    )
+    assert t.live_commit_count() == 3
+    every = {
+        (T0, "a", 1.0),
+        (T0 + 1, "b", 3.0),
+        (T0 + 2, "a", 5.0),
+        (T0 + DAY, "b", 2.0),
+        (T0 + 2 * DAY, "a", 4.0),
+    }
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    cases = [
+        ({}, every),
+        ({"lo_ms": T0, "hi_ms": T0 + DAY - 1}, {r for r in every if r[0] < T0 + DAY}),
+        # tag stats prune to the two leaves holding "b": rows are exact here
+        ({"tag_eq": "b"}, {r for r in every if r[1] == "b"}),
+    ]
+    for kwargs, want in cases:
+        before = job_ids()
+        df = t.read(**kwargs)
+        assert job_ids() == before, kwargs
+        got = {(r["timestamp"], r["tag"], r["value"]) for r in df.collect()}
+        assert got == want, kwargs
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
+        assert "Union" not in plan, plan
 
 
 def test_concurrent_writers_loser_gets_clean_error(spark, tmp_path):

@@ -656,9 +656,10 @@ def test_arrival_readers_are_map_only(spark, tmp_path):
 def test_derivatives_legs_keep_their_own_plans(spark, sf_dir):
     """r17 final shape: the leg-sharing persisted base was tried and
     REVERTED (per-run wall measured a wash — see registry_ext comment
-    and OPTIMIZATION_r17.md), so the executed plan must show NO cached
-    base (no InMemoryTableScan) and no explicit repartition node: each
-    leg plans its own exchange exactly as the pre-r17 shape did."""
+    and OPTIMIZATION_r17.md). This test pins only that: no persisted
+    base (no InMemoryTableScan) and no explicit repartition node in the
+    executed plan. It does not pin one exchange per leg — r18's fused
+    legs (delta+ewma, zscore+szn) share their exchanges on purpose."""
     from timeseries_db_spark import registry
     from timeseries_db_spark.operators.dedup import release_caches
 

@@ -586,6 +586,16 @@ def seasonal_zscore_outliers_sql(table_sql: str, threshold: float = 2.5) -> str:
 
 EWMA_LAGS = 40
 EWMA_FP = 1_000_000
+#: Window spec shared by :func:`ewma_dyadic` and :func:`delta_ewma_fused`
+#: (ties on timestamp order by the quantized value ``x6``).
+EWMA_WINDOW = "PARTITION BY tag ORDER BY timestamp, x6"
+#: Frame fold: element i (0-based) of the frame (oldest first, newest
+#: last, n rows) weighs 2^-(n - i) — shift-divide in exact integer math.
+EWMA_FOLD_SQL = (
+    "aggregate(transform(_frame, (x, i) -> "
+    "x div shiftleft(CAST(1 AS BIGINT), size(_frame) - i)), "
+    "CAST(0 AS BIGINT), (a, b) -> a + b) AS ewma_fp"
+)
 
 
 def ewma_dyadic(tsdb: DataFrame, lags: int = EWMA_LAGS) -> DataFrame:
@@ -615,12 +625,7 @@ def ewma_dyadic(tsdb: DataFrame, lags: int = EWMA_LAGS) -> DataFrame:
     content is deterministic (identical rows are interchangeable).
 
     r17: single-parse SQL strings (see :func:`point_deltas_scalable`)."""
-    w = (
-        f"PARTITION BY tag ORDER BY timestamp, x6"
-        f" ROWS BETWEEN {lags - 1} PRECEDING AND CURRENT ROW"
-    )
-    # element i (0-based) of the frame (oldest first, newest last, n
-    # rows): weight 2^-(n - i) — shift-divide in exact integer math
+    w = f"{EWMA_WINDOW} ROWS BETWEEN {lags - 1} PRECEDING AND CURRENT ROW"
     return (
         tsdb.selectExpr(
             "timestamp",
@@ -638,9 +643,7 @@ def ewma_dyadic(tsdb: DataFrame, lags: int = EWMA_LAGS) -> DataFrame:
             "timestamp",
             "tag",
             "value",
-            "aggregate(transform(_frame, (x, i) -> "
-            "x div shiftleft(CAST(1 AS BIGINT), size(_frame) - i)), "
-            "CAST(0 AS BIGINT), (a, b) -> a + b) AS ewma_fp",
+            EWMA_FOLD_SQL,
         )
     )
 
@@ -659,7 +662,7 @@ def delta_ewma_fused(tsdb: DataFrame, lags: int = EWMA_LAGS) -> DataFrame:
     docstring) the x6 tie-break is inert and the lag sees exactly
     :func:`point_deltas`' order. Bit-equality of the fused frame with
     the two separate operators is pytest-pinned."""
-    w = f"PARTITION BY tag ORDER BY timestamp, x6"
+    w = EWMA_WINDOW
     we = f"{w} ROWS BETWEEN {lags - 1} PRECEDING AND CURRENT ROW"
     return (
         tsdb.selectExpr(
@@ -682,9 +685,7 @@ def delta_ewma_fused(tsdb: DataFrame, lags: int = EWMA_LAGS) -> DataFrame:
             "value",
             duck_round_sql("value - _lv") + " AS dv",
             "timestamp - _lt AS dt_ms",
-            "aggregate(transform(_frame, (x, i) -> "
-            "x div shiftleft(CAST(1 AS BIGINT), size(_frame) - i)), "
-            "CAST(0 AS BIGINT), (a, b) -> a + b) AS ewma_fp",
+            EWMA_FOLD_SQL,
         )
     )
 

@@ -25,6 +25,10 @@ implements the same idea in miniature: an append-only set of parquet
 *commits* plus a versioned JSON manifest mapping each date partition to
 its current file set, with an atomically-swapped version pointer.
 
+* **A read is one scan** — the manifest's live leaf dirs (one per
+  partition per commit) feed ONE parquet scan with the row schema bound,
+  so building a read starts no schema-inference job and discovers no
+  partition column.
 * **Insert is O(batch)** — new files only; no table rewrite.
 * **Update/delete are O(touched partitions)** — the key's timestamp
   determines its ``dt`` partition, so only those partitions' files are
@@ -68,13 +72,13 @@ from timeseries_db_spark.schema import TS_SCHEMA
 KEY = ["timestamp", "tag"]
 MAX_ERRORS = 10  # reference: `take 10 errors`, Handlers.hs:55,65,89
 
-#: Auto-compaction threshold: the snapshot plan unions one parquet read
-#: per live commit dir, so an uncompacted table's read plan (and its
-#: file listings) grow linearly with write count. Once more than this
-#: many commit dirs are referenced by the current manifest, the write
-#: that crossed the line folds them back to one — amortized O(1) commits
-#: per read forever, same plan-size reasoning as Delta/Iceberg
-#: auto-OPTIMIZE.
+#: Auto-compaction threshold: the snapshot scan lists every live leaf
+#: dir (one per partition per commit), so an uncompacted table's file
+#: and leaf-dir count per read grows linearly with write count. Once
+#: more than this many commit dirs are referenced by the current
+#: manifest, the write that crossed the line folds them back to one —
+#: amortized O(1) files per partition per read forever, same reasoning
+#: as Delta/Iceberg auto-OPTIMIZE.
 AUTO_COMPACT_COMMITS = 16
 
 
@@ -276,31 +280,22 @@ class TsTable:
     # ---------- read path ----------
 
     def _read_partitions(self, partitions: dict[str, list[str]], only: set[str] | None = None) -> DataFrame:
-        """Assemble the current snapshot (optionally restricted to a set of
-        ``dt`` partitions) from the manifest's commit directories. One read
-        per commit dir (each with its own basePath so the hive ``dt``
-        column survives), unioned — commit count stays small because
-        compaction folds history."""
-        by_commit: dict[str, list[str]] = {}
-        for dt, rel_dirs in partitions.items():
-            if only is not None and dt not in only:
-                continue
-            for rel in rel_dirs:
-                commit_dir = rel.split("/", 1)[0]
-                by_commit.setdefault(commit_dir, []).append(
-                    os.path.join(self.path, "commits", rel)
-                )
-        empty = self.spark.createDataFrame([], TS_SCHEMA)
-        out = _with_dt(empty)
-        for commit_dir, leaf_dirs in sorted(by_commit.items()):
-            base = os.path.join(self.path, "commits", commit_dir)
-            df = (
-                self.spark.read.option("basePath", base)
-                .parquet(*sorted(leaf_dirs))
-                .select("timestamp", "tag", "value", F.col("dt").cast("date").alias("dt"))
-            )
-            out = out.unionByName(df)
-        return out
+        """Assemble the snapshot ``(timestamp, tag, value)`` (optionally
+        restricted to a set of ``dt`` partitions) as ONE parquet scan over
+        the manifest's sorted leaf dirs. The schema is bound, so building
+        the plan starts no schema-inference job; each leaf dir is its own
+        root path, so no ``dt`` partition column is discovered (writers
+        recompute ``dt`` from ``timestamp``). An empty selection is a
+        local empty relation — no scan at all."""
+        leaf_dirs = sorted(
+            os.path.join(self.path, "commits", rel)
+            for dt, rel_dirs in partitions.items()
+            if only is None or dt in only
+            for rel in rel_dirs
+        )
+        if not leaf_dirs:
+            return self.spark.createDataFrame([], TS_SCHEMA)
+        return self.spark.read.schema(TS_SCHEMA).parquet(*leaf_dirs)
 
     def read(
         self,
@@ -317,8 +312,8 @@ class TsTable:
 
         ``lo_ms``/``hi_ms`` (inclusive epoch-millis bounds) prune at the
         MANIFEST level: partitions whose date lies wholly outside the
-        range are never added to the plan — no file listing, no scan, no
-        union branch. The manifest is the engine's timestamp index (the
+        range are never added to the scan — no file listing, no file
+        read. The manifest is the engine's timestamp index (the
         scale analog of the reference's IntMap subtree pruning); callers
         still apply the exact row-level filter to the survivors.
 
@@ -356,9 +351,7 @@ class TsTable:
                 if (lo_d is None or _dt.date.fromisoformat(dt) >= lo_d)
                 and (hi_d is None or _dt.date.fromisoformat(dt) <= hi_d)
             }
-        return self._read_partitions(partitions, only=only).select(
-            "timestamp", "tag", "value"
-        )
+        return self._read_partitions(partitions, only=only)
 
     # ---------- write path ----------
 
@@ -385,7 +378,8 @@ class TsTable:
         name = f"c{self.version() + 1:010d}-{uuid.uuid4().hex[:8]}"
         out_dir = os.path.join(self.path, "commits", name)
         (
-            _with_dt(df.select("timestamp", "tag", "value"))
+            # cast to TS_SCHEMA: every file matches the schema reads bind
+            _with_dt(df.select(*(F.col(f.name).cast(f.dataType) for f in TS_SCHEMA)))
             .repartition("dt")
             .sortWithinPartitions("dt", "tag", "timestamp")
             .write.partitionBy("dt")
@@ -398,9 +392,9 @@ class TsTable:
         stats: dict[str, list[str] | None] = {}
         if parts:
             rows = (
-                self.spark.read.option("basePath", out_dir)
+                self.spark.read.schema("tag string, dt string")
                 .parquet(out_dir)
-                .groupBy(F.col("dt").cast("string").alias("dt"))
+                .groupBy("dt")
                 .agg(F.collect_set("tag").alias("tags"))
                 .collect()
             )
@@ -651,7 +645,6 @@ class TsTable:
             keep = (
                 self._read_partitions(manifest, only={cutoff_day})
                 .filter(F.col("timestamp") >= before_ms)
-                .select("timestamp", "tag", "value")
             )
             # ONE evaluation of the boundary partition (ADVICE r8: a
             # limit(1).count() emptiness probe before the write read the
@@ -781,8 +774,9 @@ class TsTable:
     # ---------- maintenance ----------
 
     def live_commit_count(self) -> int:
-        """Distinct commit dirs referenced by the current manifest — the
-        number of union branches in an unpruned snapshot plan."""
+        """Distinct commit dirs referenced by the current manifest — what
+        auto-compaction bounds (each adds up to one leaf dir per
+        partition to a snapshot read)."""
         return len(
             {
                 rel.split("/", 1)[0]
